@@ -76,26 +76,32 @@ object Pipeline {
       if (total == 0) 1.0 else succeeded.toDouble / total.toDouble
   }
 
-  /** Handle on a pipeline run. `results` is lazy like any Dataset;
-    * [[metrics]] is the exact, recomputation-safe source of truth.
-    * The accumulators are live task-level counters for in-flight
-    * progress monitoring (ref progress bar `:420-425`) and — like all
-    * Spark accumulators — over-count if the dataset is recomputed by
-    * multiple actions; don't use them for final numbers.
+  /** Handle on a pipeline run. The first access to [[results]] runs
+    * the stages and materializes their output with an eager
+    * `localCheckpoint`; [[metrics]], [[summary]], [[statusEvents]] and
+    * every caller's query over `results` then read that checkpoint.
+    * So each record's stages run once per run, barring Spark task
+    * re-execution, as the reference runs each script once per file
+    * (`Batch Processor.py:306-361`). The accumulators therefore agree
+    * with [[metrics]] once `results` is materialized; while it runs
+    * they are live progress counters (ref progress bar `:420-425`).
+    *
+    * The checkpoint blocks live on the executors and are freed by the
+    * ContextCleaner once the `Run` is unreachable. Losing an executor
+    * that holds some of them fails later actions on this run.
     */
   final class Run[T](
-      val results: Dataset[RecordResult[T]],
+      mapped: Dataset[RecordResult[T]],
       val successAcc: LongAccumulator,
       val failureAcc: LongAccumulator,
       recordName: T => String) extends Serializable {
 
-    /** Materialized run metrics (one action; accumulators agree with
-      * the dataset because results are computed exactly once here).
-      */
+    /** The per-record outcomes, materialized on first access. */
+    lazy val results: Dataset[RecordResult[T]] = mapped.localCheckpoint(eager = true)
+
+    /** Run metrics, read off [[summary]]. */
     lazy val metrics: RunMetrics = {
-      val row = results.agg(
-        count(lit(1)).as("total"),
-        sum(when(col("ok"), 1L).otherwise(0L)).as("succ")).head()
+      val row = summary(results.sparkSession).head()
       val total = row.getLong(0)
       val succ = row.getLong(1)
       RunMetrics(total, succ, total - succ)
@@ -119,11 +125,12 @@ object Pipeline {
 
     /** Grand-total summary DataFrame (ref `:329` "`n` of `m`"). */
     def summary(spark: SparkSession): DataFrame = {
+      val total = count(lit(1))
+      val succ = sum(when(col("ok"), 1L).otherwise(0L))
       results.agg(
-        count(lit(1)).as("total"),
-        sum(when(col("ok"), 1L).otherwise(0L)).as("succeeded"),
-        (sum(when(col("ok"), 1L).otherwise(0L)).cast("double") /
-          count(lit(1)).cast("double")).as("success_ratio"))
+        total.as("total"),
+        succ.as("succeeded"),
+        (succ.cast("double") / total.cast("double")).as("success_ratio"))
     }
   }
 
@@ -147,7 +154,7 @@ object Pipeline {
     val successAcc = spark.sparkContext.longAccumulator("pipeline.success")
     val failureAcc = spark.sparkContext.longAccumulator("pipeline.failure")
 
-    val results = corpus.map { record =>
+    val mapped = corpus.map { record =>
       var current = record
       var failed: Option[(String, Throwable)] = None
       var ran = 0
@@ -169,7 +176,7 @@ object Pipeline {
           RecordResult(record, ok = false, stage, classifyError(msg), msg, ran)
       }
     }
-    new Run(results, successAcc, failureAcc, recordName)
+    new Run(mapped, successAcc, failureAcc, recordName)
   }
 
   /** DataFrame-level ordered stage fold — the columnar face of the

@@ -310,6 +310,10 @@ object Tables {
   /** Recursive-scan source with suffix predicate — the Spark shape of the
     * reference's `get_lisp_files` (`Batch Processor.py:53-60`): flatten a
     * directory tree into a path DataFrame, filter case-insensitively.
+    * Only `path` and `length` are read, so no file is opened, and the
+    * scan is planned at one partition per core: the default 4 MB open
+    * cost per file would otherwise split a tree of small files into
+    * many near-empty tasks.
     */
   def scanFiles(spark: SparkSession, root: String, suffix: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -319,5 +323,6 @@ object Tables {
       .load(root)
       .select(col("path"), col("length"))
       .filter(lower(col("path")).endsWith(suffix.toLowerCase))
+      .coalesce(spark.sparkContext.defaultParallelism)
   }
 }

@@ -84,6 +84,26 @@ class PipelineSpec extends SparkTestBase {
     assert(math.abs(row.getDouble(2) - 0.5) < 1e-12)
   }
 
+  test("each record's stages run once per run, whatever reads the results") {
+    val n = 40
+    val corpus = (1 to n).map(i => Rec(i, s"v$i")).toDS()
+    val calls = spark.sparkContext.longAccumulator("stage.calls")
+    val stages = mkStages("count" -> { r =>
+      calls.add(1L)
+      if (r.id % 5 == 0) throw new RuntimeException("nope") else r
+    })
+    val run = Pipeline.run(spark, corpus, stages, (r: Rec) => s"rec${r.id}")
+    assert(run.results.collect().length == n)
+    assert(run.metrics.total == n && run.metrics.failed == n / 5)
+    assert(run.summary(spark).head().getLong(1) == n - n / 5)
+    assert(run.statusEvents(spark).collect().length == n)
+    val dest = Files.createTempDirectory("graft-once").toString + "/out.parquet"
+    assert(CommitSink.writeVerified(spark,
+      run.results.filter($"ok").select($"value.id", $"value.v"), dest) == n - n / 5)
+    assert(calls.value == n, s"stage ran ${calls.value} times over $n records")
+    assert(run.successAcc.value + run.failureAcc.value == n)
+  }
+
   test("retry: succeeds within budget, exhausts with RetriesExhausted") {
     var calls = 0
     val got = Retry(retries = 3)(

@@ -21,6 +21,30 @@ class TablesSpec extends SparkTestBase {
     assert(!got.exists(_.endsWith("skip.txt")))
   }
 
+  test("scanFiles plans at most one partition per core over many small files") {
+    val root = Files.createTempDirectory("graft-scan-many")
+    val files = (0 until 240).map { i =>
+      val dir = Files.createDirectories(Paths.get(root.toString, s"d${i % 8}"))
+      val ext = if (i % 6 == 0) "txt" else "dwg"
+      Files.writeString(dir.resolve(s"f$i.$ext"), "x" * (1 + i % 7))
+    }
+    val expected = files.filter(_.toString.endsWith(".dwg"))
+      .map(f => (f.toString, Files.size(f))).toSet
+
+    val cores = spark.sparkContext.defaultParallelism
+    val raw = spark.read.format("binaryFile")
+      .option("recursiveFileLookup", "true").load(root.toString)
+      .select("path", "length")
+    assert(raw.rdd.getNumPartitions > cores,
+      "the tree must be large enough that an uncoalesced scan splits it finer")
+
+    val scan = Tables.scanFiles(spark, root.toString, ".dwg")
+    assert(scan.rdd.getNumPartitions <= cores)
+    val got = scan.collect()
+      .map(r => (new java.net.URI(r.getString(0)).getPath, r.getLong(1))).toSet
+    assert(got == expected)
+  }
+
   test("readCsv isolates malformed rows in _corrupt_record (A12 analog)") {
     import org.apache.spark.sql.types._
     val dir = Files.createTempDirectory("graft-csv")
